@@ -352,7 +352,17 @@ final class CrawlWorkload(
 
   /** Per-layer metrics from the traced episode and the alone probes. */
   def reportLayers(): Unit = {
-    val loopSpans = tracer.named("crawl.loop_run")
+    // every span read here is opened by a passing run; one that never
+    // opened fails the run instead of reading as 0
+    val checked = mutable.Set.empty[String]
+    def named(n: String) = {
+      val ss = tracer.named(n)
+      if (checked.add(n)) res.check(ss.nonEmpty, s"traced span $n never opened")
+      ss
+    }
+    def wall(n: String) = named(n).map(_.wallS).sum
+    def sums(n: String) = tracer.sums(tracer.jobsUnder(named(n)))
+    val loopSpans = named("crawl.loop_run")
     val loopJobs = tracer.jobsUnder(loopSpans)
     val rounds = math.max(1, loopSpans.length * scale.timedRounds)
     def bySite(f: String) = loopJobs.filter(_.site == f)
@@ -382,14 +392,12 @@ final class CrawlWorkload(
     loopJobs.groupBy(_.site).toSeq.map { case (k, js) => (k, tracer.sums(js).cpuS) }
       .sortBy(-_._2).take(8).foreach { case (k, c) => Log(f"in-loop site $k%-60s $c%.2f cpu-s") }
 
-    def wall(n: String) = tracer.named(n).map(_.wallS).sum
-    def sums(n: String) = tracer.sums(tracer.jobsUnder(tracer.named(n)))
     res.put("frontier.gate_s", wall("frontier.gate"), "s")
     res.put("frontier.gate_cpu_s", sums("frontier.gate").cpuS, "s")
     res.put("frontier.schedule_s", wall("frontier.schedule"), "s")
     res.put("frontier.schedule_cpu_s", sums("frontier.schedule").cpuS, "s")
     res.put("frontier.schedule_skew", sums("frontier.schedule").skew, "ratio")
-    val rr = tracer.named("crawl.round_run")
+    val rr = named("crawl.round_run")
     val rrJobs = tracer.jobsUnder(rr)
     res.put("crawl.plan_s", rr.map(s => s.wallS - tracer.busyS(s, rrJobs)).sum, "s")
     res.put("crawl.stats_s",
@@ -497,13 +505,15 @@ final class CrawlWorkload(
       Round.run(in, cfg, snap + 1, seqBase, seenSet, schedHint = 1L << 16)
     }
     // Round.run's checkpoint order: gated, sched0, scheduled, joined,
-    // parsed, misses, bestPerFp, fresh0, ...; confirm by schema before
-    // labelling
+    // parsed, misses, bestPerFp, fresh0, ...; confirmed by schema before
+    // labelling. A changed order fails the run: its stage metrics would
+    // otherwise come out unmeasured.
     val stages = out.cached
     def has(i: Int, cols: String*) = stages.length > i && cols.forall(stages(i).columns.contains)
     val layout = has(2, "url", "_pid") && has(3, "spans", "alive") && has(4, "links") &&
       has(6, "fingerprint", "discovered_from") && has(7, "fingerprint")
-    if (!layout) Log("Round.run checkpoint layout changed; its stages are forced unlabelled")
+    res.check(layout, "Round.run checkpoint layout changed; its stages cannot be labelled " +
+      s"(${stages.map(_.columns.mkString("[", ",", "]")).mkString(" ")})")
     val label = Map(3 -> "crawl.fetch", 4 -> "extract.in_round", 6 -> "url.in_round",
       7 -> "dedup.filter")
     stages.zipWithIndex.foreach { case (df, i) =>

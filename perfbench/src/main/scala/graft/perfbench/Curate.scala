@@ -244,6 +244,7 @@ final class CurateWorkload(
   def reportLayers(): Unit = {
     OpNames.foreach { op =>
       val spans = tracer.named(s"pipeline.$op")
+      res.check(spans.nonEmpty, s"traced span pipeline.$op never opened")
       val sums = tracer.sums(tracer.jobsUnder(spans))
       val k = math.max(1, spans.length)
       res.put(s"pipeline.${op}_s", spans.map(_.wallS).sum / k, "s")

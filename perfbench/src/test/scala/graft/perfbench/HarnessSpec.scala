@@ -17,12 +17,12 @@ import java.nio.file.Files
   */
 class HarnessSpec extends AnyFunSuite {
 
-  private def runTiny(workload: String): (Results, Seq[String]) = {
+  private def runTiny(workload: String, trace: Boolean = false): (Results, Seq[String]) = {
     val work = Files.createTempDirectory("perfbench-spec")
     val out = new java.io.ByteArrayOutputStream()
     try {
       val res = Console.withOut(out) {
-        Main.run(Main.Opts(workload, seed = 3, seconds = 1, trace = false, work = work,
+        Main.run(Main.Opts(workload, seed = 3, seconds = 1, trace = trace, work = work,
           launchMs = System.currentTimeMillis(), digests = None, sourceId = "spec",
           scales = Main.Tiny))
       }
@@ -44,6 +44,15 @@ class HarnessSpec extends AnyFunSuite {
         assert(res.metrics(m)._1 > 0, s"$m is 0")
       }
     }
+  }
+
+  test("the traced discover run at tiny size labels Round.run's stages and opens every span") {
+    val (res, lines) = runTiny("discover", trace = true)
+    assert(res.failed == 0, res.failures.mkString("; "))
+    assert(lines.last.startsWith("""{"correct": true"""))
+    Seq("crawl.fetch_s", "extract.in_round_cpu_s", "url.in_round_cpu_s", "dedup.filter_s",
+      "dedup.bloom_pass_ratio", "dedup.fresh_ratio", "crawl.fetch_corpus_pass_ratio",
+      "trace.overhead_ratio").foreach(m => assert(res.metrics.contains(m), s"$m missing"))
   }
 
   private def withSpark[A](f: SparkSession => A): A = {
