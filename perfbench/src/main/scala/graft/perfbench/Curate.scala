@@ -18,8 +18,9 @@ final case class CurateScale(hosts: Int, vectors: Int, queries: Int, dim: Int, r
 /** The pipeline operators over the page text of a seeded window of the
   * synthetic crawl corpus (10% clone hosts, a 20-word filler vocabulary),
   * and the ANN operators over seeded synthetic vectors. Each op is one
-  * public call forced through [[Sink.checksum]]; the op set repeats until
-  * the passes have used the run's seconds. Then a batch of reads: search
+  * public call forced through [[Sink.checksum]]; after an untimed warm-up
+  * on a small slice, the op set repeats until the passes have used the
+  * run's seconds, and at least three times. Then a batch of reads: search
   * over an index of the window's text and single-vector top-k lookups.
   */
 final class CurateWorkload(
@@ -100,6 +101,14 @@ final class CurateWorkload(
     * IVF results are checked by invariant only, never by digest.
     */
   private val NoDigest = Set("ann_ivf")
+
+  /** Each op's figure is its median over the passes of a run, and an
+    * untraced run times at least this many passes, whatever its seconds:
+    * the JIT is still settling in the first timed pass (on a 4-core box
+    * its ops ran 10-60% slower than in later passes, also after a warm-up
+    * pass over the full inputs), and the median of three drops it.
+    */
+  private val MinPasses = 3
 
   private val opS = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
   private val searchMs = mutable.ArrayBuffer.empty[Double]
@@ -195,8 +204,8 @@ final class CurateWorkload(
   }
 
   /** Untimed warm-up on a small slice of the same inputs: the op set and
-    * a few reads, so the timed pass finds the JIT and Spark's generated-code
-    * cache warm instead of measuring compilation.
+    * a few reads, so the timed passes find Spark's generated-code cache
+    * warm instead of measuring compilation.
     */
   private def warmUp(): Unit = {
     setup(-1, math.min(20, scale.hosts), math.min(200, scale.vectors))
@@ -211,7 +220,9 @@ final class CurateWorkload(
     }
     Log(f"curate warm-up $warmS%.2f s, input builds ${setups.map(x => f"$x%.2f").mkString(" ")} s")
     tracer.enabled = traced
-    while (passes == 0 || (!traced && passWalls.sum < seconds)) pass()
+    while (passes == 0 || (!traced && (passes < MinPasses || passWalls.sum < seconds))) pass()
+    // the first read after the passes ran up to 2x slower than the rest
+    reads(2, record = false)
     reads(scale.reads, record = true)
     tracer.enabled = false
     liveHeap = Proc.liveHeapMb()
@@ -239,6 +250,10 @@ final class CurateWorkload(
     res.put("lookup_ms.p50", Stats.median(lookupMs.toSeq), "ms")
     res.put("mem.live_heap_mb", liveHeap, "MB")
     Log(f"curate: $nDocs docs x $passes passes in ${passWalls.sum}%.2f s, ${searchMs.length + lookupMs.length} reads")
+    Log("curate read ms: search " + searchMs.map(x => f"$x%.0f").mkString("/") +
+      ", lookup " + lookupMs.map(x => f"$x%.0f").mkString("/"))
+    Log("curate op seconds by pass: " + opS.map { case (op, xs) =>
+      s"$op ${xs.map(x => f"$x%.2f").mkString("/")}" }.mkString(", "))
   }
 
   def reportLayers(): Unit = {

@@ -30,7 +30,7 @@ object Main {
 
   val Full: Scales = Scales(
     discover = CrawlScale(hosts = 4000, timedRounds = 2, readsPerBatch = 16),
-    curate = CurateScale(hosts = 250, vectors = 4000, queries = 20, dim = 32, reads = 16))
+    curate = CurateScale(hosts = 250, vectors = 4000, queries = 20, dim = 32, reads = 18))
 
   /** Harness-test size: about 30 hosts, a few hundred docs. */
   val Tiny: Scales = Scales(
