@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   *                            the snapshot, so padding it to the
   *                            row-heavy superset cost ~6% of crawl CPU)
   *   6. seen-Bloom delta     (ONE treeAggregate over the cached delta,
-  *                            overlapped with the write jobs: it starts
-  *                            as soon as the row-heavy write's observed
-  *                            count fires and joins before the commit)
+  *                            in line after the writes return and before
+  *                            the manifest flip; a failed write throws
+  *                            before it, so no round whose data did not
+  *                            all land folds into the filter)
   * plus a frontier count on the FIRST round of a run only (later rounds
   * reuse the write's observed metric), plus — ONLY when the scheduled
   * count is at most the seen-prefix space (the few-candidates regime,
@@ -62,16 +63,6 @@ final class CrawlLoop(
       case _ =>
     }
   }
-
-  private val timing = sys.env.contains("GRAFT_TIMING")
-  private def timed[A](r: Int, label: String)(f: => A): A =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val res = f
-      println(f"[timing] snap=$r%d phase $label%-14s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      res
-    }
 
   /** Snapshot 0: seed frontier + seed-seen (Scrapy marks seen at ENQUEUE
     * time — SURVEY.md §6.5) + the politeness rule set (`robots_rules` is
@@ -202,38 +193,13 @@ final class CrawlLoop(
           SeenSet.Pruner(len, pfx => store.readPrefixPruned("seen", pfx).get)
         })
       // termination check (and first-round fallback for the Bloom hint)
-      val frontierRows = timed(r, "frontier_count") {
-        frontierRowsNext.getOrElse(in.frontier.count())
-      }
+      val frontierRows = frontierRowsNext.getOrElse(in.frontier.count())
       if (frontierRows == 0) { corpusHosts.unpersist(); return executed }
-      val out = timed(r, "round_plan+stats") {
-        Round.run(in, cfg, r, seqBase, seenSet,
-          schedHint = schedHintNext.map(_ * 2).getOrElse(frontierRows))
-      }
+      val out = Round.run(in, cfg, r, seqBase, seenSet,
+        schedHint = schedHintNext.map(_ * 2).getOrElse(frontierRows))
 
       val frontierObs = Observation(s"frontier-r$r")
       val seenObs = Observation(s"seen-r$r")
-      // The seen-Bloom fold (job 6 in the budget above) depends only on
-      // the cached seen delta and its observed count — which fires when
-      // the row-heavy union write completes, well inside the delta
-      // union's longer span now that the writes overlap. Launch it on a
-      // helper thread BEFORE the writes: it blocks on the observation,
-      // then runs its one treeAggregate inside the delta write's tail
-      // (optimization guide §2.6) instead of serially after all writes.
-      // The sidecar still lands strictly BEFORE the manifest flip (the
-      // Await below precedes commitManifest), so a crash leaves the
-      // filter at most ahead-by-one — the FP-safe direction the SeenSet
-      // resume path explicitly accepts. GRAFT_SEQ_BLOOM=1 restores the
-      // serial order (same-build A/B knob).
-      val seqBloom = sys.env.contains("GRAFT_SEQ_BLOOM")
-      def bloomFold(): Unit = timed(r, "seen_bloom") {
-        seenSet.update(out.seenDelta, r,
-          knownCount = seenObs.get("cnt").asInstanceOf[Long])
-      }
-      val bloomF =
-        if (seqBloom) None
-        else Some(scala.concurrent.Future(bloomFold())(
-          scala.concurrent.ExecutionContext.global))
       val entries = store.writeData(r,
         overwrite = Map(
           "frontier" -> out.frontierNext.observe(frontierObs,
@@ -254,16 +220,16 @@ final class CrawlLoop(
           "metrics" -> out.metricsDelta),
         rowHeavy = SnapshotStore.RowHeavyTables,
         solo = SnapshotStore.SoloTables)
-      // sidecar BEFORE the manifest flip: bloom-ahead-of-seen is FP-safe,
-      // bloom-behind is not (see SeenSet crash-consistency scaladoc).
-      // The delta Bloom is ONE cheap job over the cached delta (see
-      // SeenSet.update for why it must not ride the write as a metric);
-      // it was launched above, overlapped with the writes — join it here.
-      bloomF match {
-        case Some(f) => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf)
-        case None => bloomFold()
-      }
+      // job 6: fold the delta into the seen-Bloom and write its sidecar
+      // tagged r, after every write has landed and before the manifest
+      // flip (bloom-ahead-of-seen is FP-safe, bloom-behind is not; see
+      // SeenSet's crash-consistency scaladoc). A failed write throws
+      // before this line with no write job left running, so no fold or
+      // sidecar outlives it, and the fold, which mutates the filter the
+      // round's probe read, never overlaps a job still reading that
+      // probe.
+      seenSet.update(out.seenDelta, r,
+        knownCount = seenObs.get("cnt").asInstanceOf[Long])
       store.commitManifest(r, entries)
 
       seqBase += out.scheduledCount

@@ -95,21 +95,6 @@ object Similarity {
           .cast("double") / lit(1.40737488355328e14) - lit(1.0)
     }
 
-  /** nBits-bit random-hyperplane signature (SimHash for vectors):
-    * bit j = sign(v · r_j). Vectors in the same bucket are likely
-    * cosine-close; probing only the bucket turns top-k from O(n) per
-    * query into O(bucket) — the IVF-style scale path.
-    */
-  def hyperplaneSignature(vec: Column, nBits: Int,
-      family: HashFamily = HashFamily.XxHash64): Column =
-    (0 until nBits).map { j =>
-      val d = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(j, i, family)),
-        lit(0.0), (acc, x) => acc + x)
-      when(d > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce[Column]((a, b) => a.bitwiseOR(b))
-
   /** Approximate top-k: bucket by hyperplane signature, rank within the
     * matched buckets only. Recall < 1 by construction (documented
     * tradeoff): per-table collision probability for angle θ is

@@ -110,7 +110,6 @@ final class SnapshotStore(val rootDir: String, spark: SparkSession) {
     val prev: Map[String, Seq[String]] =
       latestSnapshot.map(readManifest).getOrElse(Map.empty)
 
-    val timing = sys.env.contains("GRAFT_TIMING")
     val entries = scala.collection.mutable.Map[String, Seq[String]](prev.toSeq: _*)
 
     // the WRITE half — thread-safe (no shared mutable state): may run
@@ -122,10 +121,8 @@ final class SnapshotStore(val rootDir: String, spark: SparkSession) {
           df.withColumn("_t", org.apache.spark.sql.functions.lit(t))
         }
         .reduce(_.unionByName(_, allowMissingColumns = true))
-      val t0 = System.nanoTime()
       union.write.mode("overwrite").partitionBy("_t")
         .parquet(root.resolve(rel).toString)
-      if (timing) println(f"[timing] snap=$snap%d write $rel%s(${tables.size}%d tables) ${(System.nanoTime() - t0) / 1e9}%7.2fs")
     }
 
     // the BOOKKEEPING half — applied sequentially after the writes
@@ -148,17 +145,16 @@ final class SnapshotStore(val rootDir: String, spark: SparkSession) {
           f"combined/solo-$t-$snap%06d" -> Seq(t -> df)
         }).filter(_._2.nonEmpty)
     // the 2-3 per-snapshot write jobs are INDEPENDENT (disjoint tables,
-    // disjoint output dirs) and each carries a low-parallelism tail
-    // (GRAFT_TIMING round-7 attribution: the three sequential writes
-    // were ~10-15 s of a ~24 s crawl round with executors mostly idle
-    // in their tails) — submit them concurrently so the FIFO scheduler
-    // back-fills one job's tail with the next job's tasks (optimization
-    // guide §2.6). Manifest bookkeeping stays sequential below; the
-    // atomic manifest rename still happens strictly after every write
-    // completes, so the crash model is unchanged. Data contents are
-    // byte-identical (frozen goldens + twin re-verified).
-    // GRAFT_SEQ_WRITES=1 restores the sequential shape (A/B knob).
-    if (unions.size <= 1 || sys.env.contains("GRAFT_SEQ_WRITES")) {
+    // disjoint output dirs) and each carries a low-parallelism tail —
+    // submit them concurrently so the FIFO scheduler back-fills one
+    // job's tail with the next job's tasks (optimization guide §2.6).
+    // Failure rule: wait for EVERY submitted write to finish, then
+    // rethrow the first failure (submission order) with the others
+    // suppressed — no write job outlives the exception, so a caller's
+    // retry of `snap` never races a stale write into the same dirs.
+    // Manifest bookkeeping stays sequential below, and the manifest flip
+    // (`commitManifest`) comes strictly after every write.
+    if (unions.size <= 1) {
       unions.foreach { case (rel, tabs) => writeUnion(rel, tabs) }
     } else {
       import scala.concurrent.{Await, Future}
@@ -167,7 +163,11 @@ final class SnapshotStore(val rootDir: String, spark: SparkSession) {
       val fs = unions.map { case (rel, tabs) =>
         Future(writeUnion(rel, tabs))
       }
-      fs.foreach(Await.result(_, Duration.Inf))
+      val failures = fs.flatMap(f => Await.ready(f, Duration.Inf).value.get.failed.toOption)
+      failures.headOption.foreach { e =>
+        failures.tail.foreach(e.addSuppressed)
+        throw e
+      }
     }
     unions.foreach { case (rel, tabs) => recordUnion(rel, tabs) }
     entries.toMap

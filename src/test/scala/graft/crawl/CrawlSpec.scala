@@ -5,10 +5,14 @@ import graft.fixtures.SyntheticCorpus
 import graft.model._
 import graft.store.SnapshotStore
 import graft.url.Urls
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.sql.{DataFrame, GraftExtTestBridge, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.ByteBuffer
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Golden-replay + property tests for the crawl loop (SURVEY.md §7 t2 +
   * the partitioning-independence property that catches shuffle/order bugs).
@@ -328,6 +332,52 @@ class CrawlSpec extends AnyFunSuite {
     assert(committedRules == SyntheticCorpus.robotsLocal(nHosts).toSet)
   }
 
+  test("FAILED ROUND: a write that throws leaves no sidecar, job or waiting thread; resume ≡ straight 6 rounds") {
+    val dir = Files.createTempDirectory("crawl-failed").toString
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val store = new SnapshotStore(dir, spark)
+    val loop = new CrawlLoop(store, cfg)
+    loop.init(seeds, robotsDS)
+    // round 3's wide-tables union (frontier/domains/metrics, the first
+    // write submitted) fails at job set-up while its row-heavy write —
+    // the one carrying the seen delta — and the FTS write still run
+    val protocolKey = "spark.sql.sources.commitProtocolClass"
+    val savedProtocol = spark.conf.getOption(protocolKey)
+    spark.conf.set(protocolKey, classOf[FailingCommitProtocol].getName)
+    FailingCommitProtocol.failing = Some("combined/delta-000003")
+    val e =
+      try intercept[Exception](loop.run(corpusDF, deathsDF, 6))
+      finally {
+        FailingCommitProtocol.failing = None
+        savedProtocol.fold(spark.conf.unset(protocolKey))(spark.conf.set(protocolKey, _))
+      }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected write failure")), e)
+
+    val waiting = Thread.getAllStackTraces.asScala.collect {
+      case (t, frames) if frames.exists(f =>
+          f.getClassName == classOf[Observation].getName && f.getMethodName == "get") =>
+        t.getName
+    }
+    assert(waiting.isEmpty, s"threads left waiting on an observation: $waiting")
+    GraftExtTestBridge.drainListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a write job outlived the failed round")
+    assert(store.latestSnapshot.contains(2))
+    // sidecar header: magic, then the snapshot tag (SeenSet.writeSidecar)
+    val bloomTag = ByteBuffer.wrap(Files.readAllBytes(Paths.get(dir, "seen.bloom"))).getInt(4)
+    assert(bloomTag == 2, s"seen-Bloom sidecar tagged $bloomTag after round 3 failed")
+
+    // fresh loop instance = process restart, writes no longer failing
+    val store2 = new SnapshotStore(dir, spark)
+    new CrawlLoop(store2, cfg).run(corpusDF, deathsDF, 4)
+    assert(store2.latestSnapshot.contains(6))
+    assert(logSeq(store2) == logSeq(mainStore))
+    assert(seenFps(store2) == seenFps(mainStore))
+    assert(store2.read("domains").orderBy("host").collect().toSeq ==
+      mainStore.read("domains").orderBy("host").collect().toSeq)
+  }
+
   test("pages_fts is a COMMITTED table maintained per round; committed-index search ≡ fresh full rebuild") {
     assert(mainStore.tablesAt(6).contains("pages_fts"),
       "pages_fts missing from the snapshot manifest")
@@ -378,4 +428,21 @@ class CrawlSpec extends AnyFunSuite {
       .select("server").as[String].collect()
     assert(got.length == 1 && got(0) == expect, s"host0 server=$got expect=$expect")
   }
+}
+
+/** Fails the job set-up of every file write whose output path ends with
+  * [[FailingCommitProtocol.failing]] — injects a failure into exactly one
+  * snapshot union of one round (`spark.sql.sources.commitProtocolClass`).
+  */
+class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: JobContext): Unit = {
+    if (FailingCommitProtocol.failing.exists(path.endsWith))
+      throw new java.io.IOException(s"injected write failure: $path")
+    super.setupJob(jobContext)
+  }
+}
+
+object FailingCommitProtocol {
+  @volatile var failing: Option[String] = None
 }

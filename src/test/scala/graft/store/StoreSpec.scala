@@ -1,14 +1,15 @@
 package graft.store
 
 import graft.SparkTestSession
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftExtTestBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** SnapshotStore prefix-layout lifecycle: marker set/cleared by compact,
   * reads identical across layouts, pruned reads exact with deltas and
-  * with combined retain/rewrite, empty-prefix read = deltas only.
+  * with combined retain/rewrite, empty-prefix read = deltas only; and
+  * the concurrent write path's failure rule.
   */
 class StoreSpec extends AnyFunSuite {
 
@@ -97,5 +98,54 @@ class StoreSpec extends AnyFunSuite {
       st.commit(0, overwrite = Map("seen" -> df), append = Map("seen" -> df))
     }
     assert(e.getMessage.contains("seen"))
+  }
+
+  test("a failed write leaves no write job running; retrying the snap commits exactly") {
+    val st = freshStore()
+    val base = rows(8, "p").toDF("fingerprint", "url", "first_round")
+    st.commit(1, overwrite = Map("frontier" -> base), append = Map("seen" -> base))
+    val delta = rows(8, "q").toDF("fingerprint", "url", "first_round")
+    val fts = (0 until 4).map(i => (s"term$i", i)).toDF("term", "round")
+    def write(frontier: DataFrame, postings: DataFrame): Map[String, Seq[String]] =
+      st.writeData(2, overwrite = Map("frontier" -> frontier),
+        append = Map("seen" -> delta, "pages_fts" -> postings),
+        rowHeavy = Set("seen"), solo = Set("pages_fts"))
+
+    // three unions, submitted delta (frontier), rows (seen), solo
+    // (pages_fts): the first fails in a task on one row while the solo
+    // write is still sleeping through its rows one at a time. The failing
+    // input is RDD-backed so the error is raised inside a write task: the
+    // optimizer may evaluate a projection over a local relation while it
+    // plans the query, before the other writes have submitted a job.
+    val failing = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows(8, "p"), 2))
+      .toDF("fingerprint", "url", "first_round")
+      .withColumn("first_round",
+        when(col("first_round") === 3, raise_error(lit("injected write failure")))
+          .otherwise(col("first_round")))
+    val slept = spark.sparkContext.longAccumulator("slow rows written")
+    val slow = fts.as[(String, Int)].coalesce(1)
+      .map { r => Thread.sleep(750); slept.add(1); r }.toDF("term", "round")
+    val e = intercept[Exception](write(failing, slow))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected write failure")), e)
+    assert(slept.value == 4, "writeData threw before the slow write finished")
+    GraftExtTestBridge.drainListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a write job outlived writeData's exception")
+
+    // nothing of snapshot 2 is visible
+    assert(st.latestSnapshot.contains(1))
+    for (t <- Seq("frontier", "seen"); got <- Seq(st.read(t), st.readAt(t, 1)))
+      assert(got.as[(String, String, Int)].collect().toSet == rows(8, "p").toSet)
+
+    st.commitManifest(2, write(delta, fts))
+    assert(st.latestSnapshot.contains(2))
+    assert(st.read("frontier").as[(String, String, Int)].collect().toSet ==
+      rows(8, "q").toSet)
+    assert(st.read("seen").as[(String, String, Int)].collect().toSet ==
+      (rows(8, "p") ++ rows(8, "q")).toSet)
+    assert(st.read("pages_fts").as[(String, Int)].collect().toSet ==
+      (0 until 4).map(i => (s"term$i", i)).toSet)
   }
 }
